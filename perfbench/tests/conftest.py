@@ -1,0 +1,6 @@
+"""Make ``perfbench`` importable as a package however pytest is started."""
+
+import os
+import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
