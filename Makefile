@@ -3,6 +3,16 @@
 SF ?= /root/testdata/sf0.001
 SF1_DIR ?= /tmp/shaha_sf1
 
+# magnitude-sensitive oracle family (sums that grow with volume), run by
+# oracle-sf1 and oracle-sf4
+MAGNITUDE_K = "query_matches_oracle and (tpch or profile or events_interarrival \
+  or events_hourly or events_rollup or events_retention or events_outliers \
+  or events_percentiles or token_budget or dsir or db_stats or build_summary \
+  or dq_ or winsorized or equidepth or gapfill or temperature or events_ks \
+  or bootstrap or events_trend or events_autocorr or mutual_info \
+  or quantile_disc or weighted_reservoir or events_ewma or seasonality \
+  or isotonic or rolling_median)"
+
 .PHONY: test oracle oracle-big sf1 oracle-sf1 sf4 oracle-sf4 bench plans coverage window clean
 
 test:  ## default (driver) lane — slow tier excluded via pytest.ini addopts
@@ -25,7 +35,7 @@ sf1:  ## materialize the 10x replicated sf1 dataset (key-remapped; ~3 s)
 
 oracle-sf1: sf1  ## magnitude-sensitive oracle family at sf1 (catches >2^53 divergence)
 	SHAHA_TEST_SF_DIR=$(SF1_DIR) python -m pytest tests/test_oracle.py -q \
-	  -k "query_matches_oracle and (tpch or profile or events_interarrival or events_hourly or events_rollup or events_retention or events_outliers or events_percentiles or token_budget or dsir or db_stats or build_summary or dq_ or winsorized or equidepth or gapfill or temperature or events_ks or bootstrap or events_trend or events_autocorr or mutual_info or quantile_disc or weighted_reservoir or events_ewma or seasonality or isotonic or rolling_median)"
+	  -k $(MAGNITUDE_K)
 
 SF4_DIR ?= /tmp/shaha_sf4
 
@@ -34,7 +44,7 @@ sf4:  ## 40x replicated dataset — one decade past sf1 for magnitude growth
 
 oracle-sf4: sf4  ## the same magnitude-sensitive family at 40x
 	SHAHA_TEST_SF_DIR=$(SF4_DIR) python -m pytest tests/test_oracle.py -q \
-	  -k "query_matches_oracle and (tpch or profile or events_interarrival or events_hourly or events_rollup or events_retention or events_outliers or events_percentiles or token_budget or dsir or db_stats or build_summary or dq_ or winsorized or equidepth or gapfill or temperature or events_ks or bootstrap or events_trend or events_autocorr or mutual_info or quantile_disc or weighted_reservoir or events_ewma or seasonality or isotonic or rolling_median)"
+	  -k $(MAGNITUDE_K)
 
 bench:
 	python bench.py

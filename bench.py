@@ -504,10 +504,10 @@ def main() -> None:
     # across rounds): two-stage SQ8 ANN vs the brute-force scan it
     # replaces, and the zero-join nearest-event attribution
     t0 = time.perf_counter()
-    entry.q_emb_sq_topk(spark, SF_DIR).count()
+    qs["emb_sq_topk"](spark, SF_DIR).count()
     extras["ann_sq_topk_sec"] = round(time.perf_counter() - t0, 4)
     t0 = time.perf_counter()
-    entry.q_events_nearest_join(spark, SF_DIR).count()
+    qs["events_nearest_join"](spark, SF_DIR).count()
     extras["nearest_join_sec"] = round(time.perf_counter() - t0, 4)
 
     # bytes/record vs the reference's ~47.5 B/record README datum

@@ -383,7 +383,9 @@ EXTRA = {
         lambda spark, sf: __import__(
             "shaha_spark.operators.timeseries", fromlist=["timeseries"]
         ).gapfill(
-            __import__("__spark_entry__")._events(spark, sf)
+            __import__(
+                "shaha_spark.registry.common", fromlist=["x"]
+            ).read_events(spark, sf)
         ),
     ),
     "scd2_intervals": (
@@ -393,7 +395,9 @@ EXTRA = {
         lambda spark, sf: __import__(
             "shaha_spark.operators.timeseries", fromlist=["timeseries"]
         ).scd2_intervals(
-            __import__("__spark_entry__")._events(spark, sf)
+            __import__(
+                "shaha_spark.registry.common", fromlist=["x"]
+            ).read_events(spark, sf)
         ),
     ),
     "incremental_rollup": (
@@ -406,7 +410,9 @@ EXTRA = {
                 t.rollup_increment(ev.where("event_id % 2 = 0")),
                 t.rollup_increment(ev.where("event_id % 2 = 1")),
             )
-        ))(__import__("__spark_entry__")._events(spark, sf)))(
+        ))(__import__(
+                "shaha_spark.registry.common", fromlist=["x"]
+            ).read_events(spark, sf)))(
             __import__("shaha_spark.operators.incremental", fromlist=["incremental"])
         ),
     ),
@@ -427,14 +433,14 @@ EXTRA = {
         "vectors (they rejoin via two BroadcastHashJoins after candidate "
         "selection). The code arrays and the centered integer ADC fold "
         "are codegen'd JVM expressions; the corpus scan is shuffle-free.",
-        lambda spark, sf: __import__("__spark_entry__").q_emb_sq_topk(spark, sf),
+        lambda spark, sf: __import__("__spark_entry__").queries()["emb_sq_topk"](spark, sf),
     ),
     "prefix_topk": (
         "Matryoshka two-stage: stage A scores an 8/64 slice (stored "
         "column-separate at scale, slicing in-plan here for oracle "
         "replay), top-m window moves (query_id, id, score) only; "
         "full-dim re-rank joins m·|queries| candidate rows broadcast.",
-        lambda spark, sf: __import__("__spark_entry__").q_emb_prefix_topk(
+        lambda spark, sf: __import__("__spark_entry__").queries()["emb_prefix_topk"](
             spark, sf
         ),
     ),
@@ -442,7 +448,7 @@ EXTRA = {
         "Full grouping-sets CUBE compiles to ONE Expand + one "
         "map-side-combining hash aggregate over the 4 grouping "
         "combinations — no per-set rescans, one shuffle.",
-        lambda spark, sf: __import__("__spark_entry__").q_events_cube(spark, sf),
+        lambda spark, sf: __import__("__spark_entry__").queries()["events_cube"](spark, sf),
     ),
     "events_nearest_join": (
         "Bidirectional as-of with zero joins: union-tagged sides, ONE "
@@ -451,7 +457,7 @@ EXTRA = {
         "(an unbounded-FOLLOWING first() re-scans to partition end per "
         "row: O(n²) on a hot key, measured 57× in test_skew before the "
         "fix). Nearest/tolerance choice is a codegen'd projection.",
-        lambda spark, sf: __import__("__spark_entry__").q_events_nearest_join(
+        lambda spark, sf: __import__("__spark_entry__").queries()["events_nearest_join"](
             spark, sf
         ),
     ),
@@ -459,7 +465,7 @@ EXTRA = {
         "MERGE compaction: one shuffle on the key, one row_number "
         "window (WindowGroupLimit prunes to the per-key head), delete "
         "filter folded into the same stage.",
-        lambda spark, sf: __import__("__spark_entry__").q_events_cdc_snapshot(
+        lambda spark, sf: __import__("__spark_entry__").queries()["events_cdc_snapshot"](
             spark, sf
         ),
     ),
@@ -468,14 +474,14 @@ EXTRA = {
         "BEFORE aggregation (candidate rows only), the |Q|-row idf "
         "table and corpus stats ride as broadcasts, and contributions "
         "sum decimal-exact in one doc-keyed hash-agg.",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_bm25(spark, sf),
+        lambda spark, sf: __import__("__spark_entry__").queries()["docs_bm25"](spark, sf),
     ),
     "orders_basket_rules": (
         "Market basket WITHOUT a self-join: baskets aggregate once, "
         "pairs explode from a bounded in-row expression (b(b-1)/2 per "
         "basket), per-item counts broadcast, top-20 via "
         "TakeOrderedAndProject.",
-        lambda spark, sf: __import__("__spark_entry__").q_orders_basket_rules(
+        lambda spark, sf: __import__("__spark_entry__").queries()["orders_basket_rules"](
             spark, sf
         ),
     ),
@@ -483,7 +489,7 @@ EXTRA = {
         "Running distinct count with NO expanding distinct: per-key "
         "first-bucket agg, per-bucket counts, and the only global "
         "window runs over the calendar-sized bucket table.",
-        lambda spark, sf: __import__("__spark_entry__").q_events_cumulative_users(
+        lambda spark, sf: __import__("__spark_entry__").queries()["events_cumulative_users"](
             spark, sf
         ),
     ),
@@ -492,7 +498,7 @@ EXTRA = {
         "score bucket aggregation first (bounded by the 6-decimal "
         "score grid), cumulative-negative window over buckets only, "
         "integer-exact numerator.",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_auc(spark, sf),
+        lambda spark, sf: __import__("__spark_entry__").queries()["docs_auc"](spark, sf),
     ),
     "curate_corpus": (
         "The whole curation chain is ONE plan: redaction folds into the "
@@ -520,7 +526,9 @@ EXTRA = {
             __import__(
                 "shaha_spark.pipeline.build", fromlist=["x"]
             ).hash_fanout(
-                __import__("__spark_entry__")._words(spark, sf),
+                __import__(
+                    "shaha_spark.registry.common", fromlist=["x"]
+                ).read_words(spark, sf),
                 ["sha256", "md5"],
             ),
             num_files=8,
@@ -531,7 +539,7 @@ EXTRA = {
         "Exact phrase matching via positional postings: per-term "
         "filtered projections of ONE postings lineage, equi-joined on "
         "(doc, aligned position) — no text rescan, no cross join.",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_phrase_search(
+        lambda spark, sf: __import__("__spark_entry__").queries()["docs_phrase_search"](
             spark, sf
         ),
     ),
@@ -539,7 +547,7 @@ EXTRA = {
         "Winnowing fingerprints: per-document windowed min over shingle "
         "hashes — the min window partitions by doc (never global), one "
         "hash aggregation for the distinct.",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_winnowing(
+        lambda spark, sf: __import__("__spark_entry__").queries()["docs_winnowing"](
             spark, sf
         ),
     ),
@@ -551,7 +559,7 @@ EXTRA = {
         "totals aggregate the WINDOW output, so at runtime AQE plans a "
         "ReusedExchange and the corpus is scanned + tokenized once "
         "(round 4 review fix; the static render predates stage reuse).",
-        lambda spark, sf: __import__("__spark_entry__").q_docs_token_budget(
+        lambda spark, sf: __import__("__spark_entry__").queries()["docs_token_budget"](
             spark, sf
         ),
     ),

@@ -33,9 +33,10 @@ WINDOW = 50
 
 def main() -> None:
     import __spark_entry__ as entry
+    from shaha_spark.registry import records
 
     registry = list(entry.queries())
-    oracled = set(entry.oracle_sql())
+    oracled = {k for k, r in records().items() if r.oracle is not None}
 
     latest_round: dict[str, str] = {}
     latest_green: dict[str, bool] = {}

@@ -1,8 +1,8 @@
 """Shared deterministic constants for the training-data operators.
 
 Both the Spark implementations (operators/*) and the DuckDB oracle SQL
-(__spark_entry__.oracle_sql) are generated from these values, so the
-two sides can never drift.
+(the records in shaha_spark/registry) are generated from these values,
+so the two sides can never drift.
 
 All hashing is derived from md5 hex prefixes parsed as integers —
 md5 is the one digest both engines compute identically — and all

@@ -18,8 +18,9 @@ with the real iterative algorithm, shaped for Spark's execution model:
 
 The driver-side loop is ITERATION control only (k broadcasts of k rows);
 all data-plane work is declarative DataFrame ops. An equivalent DuckDB
-oracle is generated per-iteration in __spark_entry__ (chained CTEs), so
-the whole iterative computation sits inside the value-hash gate.
+oracle is generated per-iteration in shaha_spark/registry/emb.py
+(chained CTEs), so the whole iterative computation sits inside the
+value-hash gate.
 """
 
 from __future__ import annotations

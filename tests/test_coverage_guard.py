@@ -65,9 +65,7 @@ def test_no_query_escapes_driver_verification():
     deeper in the registry would silently escape rotation."""
     keys = list(entry_mod.queries())
     verified = _verified_names()
-    anchors = set(getattr(entry_mod, "WINDOW_ANCHORS", [])) | set(
-        getattr(entry_mod, "R4_WINDOW_ANCHORS", [])
-    )
+    anchors = set(entry_mod.WINDOW_ANCHORS)
     never_idx = [i for i, k in enumerate(keys) if k not in verified]
     if not never_idx:
         return
@@ -97,6 +95,19 @@ def test_windowed_queries_have_oracles():
     oracles = entry_mod.oracle_sql()
     missing = [k for k in keys if k not in oracles and k not in NO_ORACLE_OK]
     assert not missing, f"windowed queries without oracle SQL: {missing}"
+
+
+def test_every_query_has_an_oracle():
+    """Across the whole registry, not only the window: every entry
+    carries a driver or a local oracle, and every documented
+    ``NO_ORACLE_OK`` entry carries the local one."""
+    oracles = entry_mod.oracle_sql()
+    local = entry_mod.local_oracle_sql()
+    missing = [k for k in entry_mod.queries() if k not in oracles and k not in local]
+    assert not missing, f"queries without any oracle: {missing}"
+    assert NO_ORACLE_OK <= set(local), (
+        f"NO_ORACLE_OK entries without a local oracle: {NO_ORACLE_OK - set(local)}"
+    )
 
 
 def test_oracle_keys_subset_of_queries():

@@ -31,9 +31,9 @@ def _as_map(rows):
 
 
 def test_incremental_matches_full_recompute_random_splits(spark, sf_dir):
-    from __spark_entry__ import _events
+    from shaha_spark.registry.common import read_events
 
-    ev = _events(spark, sf_dir).limit(3000).localCheckpoint(eager=True)
+    ev = read_events(spark, sf_dir).limit(3000).localCheckpoint(eager=True)
     expected = _as_map(_full(ev).collect())
 
     rng = random.Random(11)
@@ -51,9 +51,9 @@ def test_incremental_matches_full_recompute_random_splits(spark, sf_dir):
 
 
 def test_merge_with_empty_increment_is_identity(spark, sf_dir):
-    from __spark_entry__ import _events
+    from shaha_spark.registry.common import read_events
 
-    ev = _events(spark, sf_dir).limit(500)
+    ev = read_events(spark, sf_dir).limit(500)
     base = rollup_increment(ev)
     empty = rollup_increment(ev.where(F.lit(False)))
     merged = merge_rollup(base, empty)

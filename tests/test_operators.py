@@ -785,14 +785,14 @@ def test_redact_patterns_multiclass_ordered(spark):
     assert (got[2]["n_email"], got[2]["n_phone"], got[2]["n_number"]) == (0, 0, 0)
 
 
-def test_tpch_q1_rollup_levels_consistent(spark):
+def test_tpch_q1_rollup_levels_consistent(spark, sf_dir):
     """The three ROLLUP levels must be internally consistent: leaf rows
     sum to their returnflag subtotal, subtotals to the grand total, and
     gid carries Spark's grouping_id bitmask (0 leaf, 1 subtotal, 3
     total)."""
     import __spark_entry__ as entry
 
-    rows = entry.q_tpch_q1_rollup(spark, "/root/testdata/sf0.001").collect()
+    rows = entry.queries()["tpch_q1_rollup"](spark, sf_dir).collect()
     by_gid = {}
     for r in rows:
         by_gid.setdefault(r.gid, []).append(r)
@@ -813,12 +813,12 @@ def test_tpch_q1_rollup_levels_consistent(spark):
     assert total.sum_charge > 0
 
 
-def test_tpch_q1_rollup_plans_single_scan_expand(spark):
+def test_tpch_q1_rollup_plans_single_scan_expand(spark, sf_dir):
     """ROLLUP must plan ONE scan + Expand, not three aggregations."""
     import __spark_entry__ as entry
 
-    plan = entry.q_tpch_q1_rollup(
-        spark, "/root/testdata/sf0.001"
+    plan = entry.queries()["tpch_q1_rollup"](
+        spark, sf_dir
     )._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan
     assert plan.count("FileScan") <= 1

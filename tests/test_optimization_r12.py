@@ -110,7 +110,7 @@ def test_tpch_q1_two_level_matches_single_level(spark):
         (_sc(F.sum(_dec("l_quantity")), 2) / F.count(F.lit(1))).alias("avg_qty"),
         F.count(F.lit(1)).alias("count_order"),
     )
-    assert _rows(entry.q_tpch_q1(spark, SF_DIR)) == _rows(legacy)
+    assert _rows(entry.queries()["tpch_q1"](spark, SF_DIR)) == _rows(legacy)
 
 
 def test_build_fresh_attaches_sources_after_sort(spark, tmp_path):

@@ -15,6 +15,7 @@ import pytest
 
 import __spark_entry__ as staging
 from _oracle_typecheck import assert_types_compatible
+from shaha_spark.registry.common import read_table
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -48,12 +49,47 @@ def _sorted_rows(rows, cols):
     return sorted(out, key=repr)
 
 
-ORACLES = staging.oracle_sql_r4()
-QUERIES = staging.queries_r4()
+QUERIES = staging.queries()
+ORACLES = staging.oracle_sql()
+
+#: The queries first registered in round 4, now held in the shared
+#: registry like every other query.
+R4_NAMES = frozenset({
+    "dedup_cluster_sizes", "dedup_keep_best", "docs_auc", "docs_bm25",
+    "docs_bpe_encode", "docs_calibration", "docs_char_entropy",
+    "docs_clf_report", "docs_contamination_report", "docs_curated",
+    "docs_domain_importance", "docs_dsir_topk", "docs_dsir_weights",
+    "docs_dup_span_removed", "docs_freshness", "docs_hapax_ratio",
+    "docs_hashed_features", "docs_isotonic", "docs_license_scan",
+    "docs_line_dedup", "docs_logreg_score", "docs_overview",
+    "docs_phrase_search", "docs_postings_stats", "docs_ppl_buckets",
+    "docs_psi_drift", "docs_rank_fusion", "docs_redact", "docs_source_cap",
+    "docs_temperature_rates", "docs_temperature_resample",
+    "docs_token_budget", "docs_top_keywords", "docs_trigram_backoff",
+    "docs_url_policy", "docs_winnowing", "dq_functional", "dq_referential",
+    "emb_ann_recall", "emb_diverse_sample", "emb_hard_negatives",
+    "emb_ivf_index_append_topk", "emb_ivf_index_topk",
+    "emb_ivf_pq_index_append_topk", "emb_ivf_pq_index_topk",
+    "emb_ivf_pq_refine_topk", "emb_ivf_pq_topk", "emb_knn_accuracy",
+    "emb_pq_topk", "emb_prefix_ndcg", "emb_prefix_topk",
+    "emb_semantic_dedup", "emb_silhouette", "emb_sq_topk",
+    "events_ab_welch", "events_active_time", "events_audience_overlap",
+    "events_benford", "events_cdc_snapshot", "events_chi_square",
+    "events_cohort_value", "events_cube", "events_cumulative_users",
+    "events_debounce", "events_gapfill", "events_interarrival",
+    "events_key_skew", "events_mad_outliers", "events_mean_shift",
+    "events_nearest_join", "events_pit_join", "events_rollup_incremental",
+    "events_session_paths", "events_streaks", "events_value_percentile",
+    "lineitem_weighted_median", "multimodal_dedup", "orders_basket_rules",
+    "orders_kcore", "orders_pair_triangles", "orders_set_similarity",
+    "snapshot_row_diff", "snapshot_time_travel", "users_scd2",
+    "users_survival", "words_collocations", "words_freq_of_freqs",
+    "words_trigram_fuzzy",
+})
 
 
 def test_every_oracle_has_query():
-    assert set(ORACLES) <= set(QUERIES)
+    assert R4_NAMES & set(ORACLES) <= set(QUERIES)
 
 
 def test_only_documented_oracle_less():
@@ -61,7 +97,7 @@ def test_only_documented_oracle_less():
     # recursive-peel twin (graph.k_core_peel_sql), emb_ivf_pq_topk via
     # the composed PQ+IVF SQL chain, docs_bpe_encode via the roundtrip
     # invariant (decode(encode(term)) == term, exact rows).
-    assert set(QUERIES) - set(ORACLES) == set()
+    assert R4_NAMES - set(ORACLES) == set()
 
 
 def test_kcore_rows_only_invariants(spark, sf_dir):
@@ -74,7 +110,7 @@ def test_kcore_rows_only_invariants(spark, sf_dir):
     from shaha_spark.operators.basket import pair_counts
 
     core = {r.node for r in QUERIES["orders_kcore"](spark, sf_dir).collect()}
-    li = __import__("__spark_entry__")._t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
     edges = pair_counts(li, "l_orderkey", "l_partkey").where(
@@ -123,12 +159,10 @@ def test_ivf_pq_rows_only(spark, sf_dir):
 
 
 def test_r4_oracles_covered_by_main_harness():
-    """Post-merge, every former staged oracle must be reachable by the
-    generic driver-exact comparison in tests/test_oracle.py."""
-    import __spark_entry__ as entry
-
-    assert set(ORACLES) <= set(entry.oracle_sql())
-    assert set(QUERIES) <= set(entry.queries())
+    """Every r4 query and its oracle must be reachable by the generic
+    driver-exact comparison in tests/test_oracle.py."""
+    assert R4_NAMES <= set(QUERIES)
+    assert R4_NAMES <= set(ORACLES)
 
 
 def test_char_entropy_known_values(spark):
@@ -178,7 +212,7 @@ def test_bpe_encode_roundtrip_registration(spark, sf_dir):
     # fire), so the roundtrip isn't vacuously the identity
     from shaha_spark.operators.terms import bpe_train
 
-    docs = staging._t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     assert len(bpe_train(docs, num_merges=8)) > 0
 
 

@@ -63,10 +63,10 @@ def test_retained_differs_from_lag_debounce(spark):
 
 
 def test_batch_twin_matches_reference_on_fixture(spark, sf_dir):
-    from __spark_entry__ import _events
+    from shaha_spark.registry.common import read_events
 
     ev = (
-        _events(spark, sf_dir)
+        read_events(spark, sf_dir)
         .select("event_id", "user_id", "event_type", F.col("tus").alias("ts_us"))
         .limit(3000)
     )

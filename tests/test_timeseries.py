@@ -98,9 +98,9 @@ def test_scd2_intervals_reconstruct_change_history(spark):
 
 
 def test_scd2_closed_open_intervals_tile_the_timeline(spark, sf_dir):
-    from __spark_entry__ import _events
+    from shaha_spark.registry.common import read_events
 
-    out = scd2_intervals(_events(spark, sf_dir).limit(2000))
+    out = scd2_intervals(read_events(spark, sf_dir).limit(2000))
     rows = out.collect()
     by_user = {}
     for r in rows:
@@ -173,7 +173,7 @@ def test_source_cap_plan_uses_window_group_limit(spark):
     # mega-domain never fully sorts through the window operator
     import __spark_entry__ as staging
 
-    plan = _plan(staging.queries_r4()["docs_source_cap"](spark, SF))
+    plan = _plan(staging.queries()["docs_source_cap"](spark, SF))
     assert "WindowGroupLimit" in plan
     assert "EvalPython" not in plan
 
@@ -181,7 +181,7 @@ def test_source_cap_plan_uses_window_group_limit(spark):
 def test_gapfill_plan_no_python_single_corpus_scan(spark):
     import __spark_entry__ as staging
 
-    plan = _plan(staging.queries_r4()["events_gapfill"](spark, SF))
+    plan = _plan(staging.queries()["events_gapfill"](spark, SF))
     assert "EvalPython" not in plan
     # hourly agg feeds both the span (grid) side and the join-back side:
     # two scans of the events table by design, never more
@@ -192,7 +192,7 @@ def test_debounce_and_scd2_plans_single_shuffle_no_python(spark):
     import __spark_entry__ as staging
 
     for name in ["events_debounce", "users_scd2"]:
-        plan = _plan(staging.queries_r4()[name](spark, SF))
+        plan = _plan(staging.queries()[name](spark, SF))
         assert "EvalPython" not in plan, name
         # one hash shuffle on the partition key; scd2's second window
         # shares the sort (same keys), its LEAD pass rides the grouped
